@@ -5,12 +5,13 @@ same force() methodology (count + xxhash over every output column so
 Catalyst cannot prune the computation), plus an optional noop sink.
 
 Usage:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py q1 q2 ...
+  SPARK_GRAFT_SF_DIR=<sf dir> python bench_extra.py q1 q2 ...  # default: bench.py's
   python bench_extra.py --noop q1        # noop sink instead of force()
   python bench_extra.py --reps 3 q1      # report all reps (first=warm-up)
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -19,16 +20,21 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+from bench import SF_DIR  # noqa: E402  (the frozen suite's data dir)
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="+", help="registry query names")
+    ap.add_argument("--noop", action="store_true",
+                    help="noop sink instead of force()")
+    ap.add_argument("--reps", type=int, default=2,
+                    help="repetitions per query (the first is a warm-up)")
+    return ap.parse_args(argv)
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    noop = "--noop" in sys.argv
-    reps = 2
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1])
+    args = parse_args()
     from pyspark.sql import functions as F
     from mobilitydb_spark.queries import registry
     from mobilitydb_spark.session import get_spark
@@ -43,14 +49,14 @@ def main() -> None:
                          F.bit_xor(F.xxhash64(*cols)).alias("chk")).collect()
 
     out = {}
-    for name in args:
+    for name in args.queries:
         fn, _ = reg[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         times = []
-        for _ in range(reps):
+        for _ in range(args.reps):
             t0 = time.time()
             df = fn(spark, SF_DIR)
-            if noop:
+            if args.noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 force(df)
@@ -58,7 +64,7 @@ def main() -> None:
         out[name] = times
         print(name, times, flush=True)
     print(json.dumps({"sf": os.path.basename(SF_DIR.rstrip('/')),
-                      "noop": noop, "times": out}))
+                      "noop": args.noop, "times": out}))
     spark.stop()
 
 

@@ -166,8 +166,10 @@ def ivf_topk(queries: DataFrame, candidates: DataFrame, k: int,
                          f"{c_id} bigint, ce array<float>, cluster int")
     else:
         raise ValueError(f"unknown quantizer {quantizer!r}")
-    cents = spark.createDataFrame(cent_rows,
-                                  "cluster int, centroid array<double>")
+    # pandas, not a list: Arrow makes the centroid table a LocalRelation
+    cents = spark.createDataFrame(
+        pd.DataFrame(cent_rows, columns=["cluster", "centroid"]),
+        "cluster int, centroid array<double>")
     # nprobe nearest centroids per query (centroid table broadcast)
     qv = queries.select(F.col(q_id), F.col(vec).alias("qe"))
     d2 = F.aggregate(

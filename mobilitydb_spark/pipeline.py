@@ -194,8 +194,12 @@ def pip_join_broadcast_jvm(points: DataFrame, polygons_pdf: pd.DataFrame,
     Scale note: this is the preferred flagship path — the pandas
     variant (`pip_join_broadcast`) is Arrow-feed-bound in local mode;
     this one scales with the scan.
+
+    The cover and edge tables are built from pandas frames, which
+    Arrow turns into driver-side ``LocalRelation``s: a Python list
+    would become a pickled Python RDD whose broadcast runs a
+    Python-worker job on every call.
     """
-    import numpy as np
     from . import cells as C
 
     spark = points.sparkSession
@@ -208,11 +212,10 @@ def pip_join_broadcast_jvm(points: DataFrame, polygons_pdf: pd.DataFrame,
         geoms.append((int(pid), g, b))
     if not geoms:
         # every polygon empty → empty join, not an IndexError in the
-        # auto index_res median computation
-        from pyspark.sql.types import LongType, StructField, StructType
-        empty_schema = StructType(list(points.schema.fields)
-                                  + [StructField("poly_id", LongType())])
-        return spark.createDataFrame([], empty_schema)
+        # auto index_res median computation (limit 0 optimizes to an
+        # empty LocalRelation: no scan, no job)
+        return points.limit(0).select(
+            *points.columns, F.lit(None).cast("bigint").alias("poly_id"))
     if index_res is None:
         # size the cover grid to the MEDIAN polygon dimension: a cell
         # much larger than the polygons multiplies candidates per point
@@ -234,11 +237,15 @@ def pip_join_broadcast_jvm(points: DataFrame, polygons_pdf: pd.DataFrame,
                               "y2": float(ring[i + 1, 1])})
         edge_rows.append((pid, edges, float(b[0]), float(b[1]),
                           float(b[2]), float(b[3])))
-    cover = spark.createDataFrame(cover_rows, "jcell bigint, poly_id bigint")
+    cover = spark.createDataFrame(
+        pd.DataFrame(cover_rows, columns=["jcell", "poly_id"]),
+        "jcell bigint, poly_id bigint")
     edges_df = spark.createDataFrame(
-        edge_rows, "poly_id bigint, edges array<struct<x1:double,y1:double,"
-                   "x2:double,y2:double>>, bx0 double, by0 double, "
-                   "bx1 double, by1 double")
+        pd.DataFrame(edge_rows, columns=["poly_id", "edges", "bx0", "by0",
+                                         "bx1", "by1"]),
+        "poly_id bigint, edges array<struct<x1:double,y1:double,"
+        "x2:double,y2:double>>, bx0 double, by0 double, "
+        "bx1 double, by1 double")
 
     out_parts = []
     res_list = sorted({c >> C.R_BITS for c, _ in cover_rows})

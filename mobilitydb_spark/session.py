@@ -6,8 +6,9 @@ spark-submit entrypoints share one configuration story:
 - AQE on (runtime coalescing + skew-join splitting — the dynamic
   complement to our explicit hot-cell salting)
 - Arrow execution for every pandas UDF (all kernels are Arrow-batched)
-- shuffle partitions sized for the local[32] sandbox; a real cluster
-  overrides via spark-submit --conf (documented in README)
+- local mode on every core of the host unless SPARK_GRAFT_CPUS says
+  otherwise; shuffle partitions sized to it; a real cluster overrides
+  via spark-submit --conf (documented in README)
 """
 
 from __future__ import annotations
@@ -17,14 +18,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_master() -> str:
+    """``SPARK_GRAFT_MASTER``, else ``local[SPARK_GRAFT_CPUS]``, else
+    local mode on every core the host reports."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    return os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
+
+
 def get_spark(app: str = "mobilitydb-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """``extra_conf`` lets callers set master-specific knobs (e.g.
     ``local-cluster[n,c,mem]`` needs spark.executor.memory and an
     executor-side PYTHONPATH) without duplicating the defaults."""
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     if shuffle_partitions is None:
         # local mode: match core count; on a cluster this is overridden
         n = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"

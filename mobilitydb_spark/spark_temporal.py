@@ -323,6 +323,17 @@ def tnumber_twavg(points: DataFrame, key: str = "key", t: str = "t",
     return _per_key_np_kernel(points, key, schema, stats, t, (v,))
 
 
+def _probe_table(spark, probes_us: list[int]) -> DataFrame:
+    """The distinct probe instants as a one-column ``p_us`` table.
+    Built from pandas so Arrow makes it a driver-side LocalRelation; a
+    Python list would be a pickled Python RDD, broadcast by a
+    Python-worker job."""
+    return spark.createDataFrame(
+        pd.DataFrame({"p_us": np.unique(np.asarray(probes_us,
+                                                   dtype=np.int64))}),
+        "p_us bigint")
+
+
 def _lerp_at_probes(points: DataFrame, probes_us: list[int],
                     key: str, t: str, value_cols: tuple[str, ...],
                     step: bool = False) -> DataFrame:
@@ -391,8 +402,7 @@ def _lerp_at_probes(points: DataFrame, probes_us: list[int],
                             F.lit(base) + F.col("_pidx") * F.lit(stp))
                 .drop("_pidx"))
     else:
-        probes_df = F.broadcast(spark.createDataFrame(
-            [(int(p),) for p in ps], "p_us bigint"))
+        probes_df = F.broadcast(_probe_table(spark, ps))
         on_seg = (F.col("_nt").isNotNull()
                   & (F.col("p_us") >= F.col("t_us"))
                   & (F.col("p_us") < F.col("_nt")))
@@ -690,8 +700,11 @@ def tdwithin_pair_stats(points: DataFrame, dist: float,
             lo2, hi2 = t1i[full2], t2i[full2]
             at_lo = lo2 == lower[m2]
             at_hi = hi2 == upper[m2]
-            put(m2, lo2, hi2,
-                np.where(at_lo, True, True),
+            # the lower bound is inclusive in every nsol == 2 branch
+            # of `tpoint_tempspatialrels.c:1101-1290`: ``li`` when
+            # t1 == lower (always true on a closed sync window),
+            # else the crossing instant t1 itself
+            put(m2, lo2, hi2, True,
                 np.where(at_hi, ui[m2], np.where(at_lo & ~at_hi,
                                                  False, True)))
         if not has.any():
@@ -744,9 +757,7 @@ def _wagg_probe_join(points: DataFrame, window_us: int,
     iff p−w ≤ t ≤ p) — the pure-Catalyst base of the window-aggregate
     profiles (`src/temporal_waggfuncs.c:31-60`)."""
     from pyspark.sql import functions as F
-    spark = points.sparkSession
-    probes_df = F.broadcast(spark.createDataFrame(
-        [(int(p),) for p in sorted(set(probes_us))], "p_us bigint"))
+    probes_df = F.broadcast(_probe_table(points.sparkSession, probes_us))
     pts = points.select(
         key, F.unix_micros(F.col(t).cast("timestamp")).alias("t_us"),
         F.col(v).alias("_v")).dropDuplicates([key, "t_us"])

@@ -187,3 +187,67 @@ def test_spatial_rels_jvm_matches_kernel(spark):
     for bad in ("BatchEvalPython", "ArrowEvalPython",
                 "FlatMapGroupsInPandas", "MapInPandas"):
         assert bad not in plan, bad
+
+
+def _assert_driver_table_is_local(df):
+    """A table the driver builds from Python values must reach the plan
+    as an Arrow-built LocalRelation (LocalTableScan once physical, e.g.
+    inside a cached subtree), never as a pickled Python RDD
+    (LogicalRDD / Scan ExistingRDD), whose broadcast runs a
+    Python-worker job.  Also catches a silent Arrow fallback."""
+    plan = _optimized(df)
+    assert "LocalRelation" in plan or "LocalTableScan" in plan, plan
+    assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan
+
+
+def _range_points(spark):
+    """Instant rows with no driver-built table of their own."""
+    return spark.range(20).select(
+        F.pmod("id", F.lit(4)).alias("key"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 3600)
+        .alias("t"),
+        F.col("id").cast("double").alias("v"))
+
+
+def test_flagship_cover_and_edges_are_local_relations(spark, pages_path):
+    pages = spark.read.parquet(pages_path)
+    out = pipeline.flagship(pages, fixtures.polygons_pd("admin", 8))
+    _assert_driver_table_is_local(out)
+
+
+def test_irregular_probe_table_is_local_relation(spark):
+    from mobilitydb_spark import spark_temporal as ST
+    base = 1704067200 * 1_000_000
+    # unequal steps take the broadcast range-join branch
+    probes = [base + 1800_000_000, base + 5400_000_000,
+              base + 12600_000_000]
+    df = ST._lerp_at_probes(_range_points(spark), probes, "key", "t",
+                            ("v",))
+    _assert_driver_table_is_local(df)
+    assert df.count() > 0
+
+
+def test_wagg_probe_table_is_local_relation(spark):
+    from mobilitydb_spark import spark_temporal as ST
+    base = 1704067200 * 1_000_000
+    df = ST._wagg_probe_join(_range_points(spark), 3600_000_000,
+                             [base + 7200_000_000, base], "key", "t", "v")
+    _assert_driver_table_is_local(df)
+    assert df.count() > 0
+
+
+def test_ivf_centroid_table_is_local_relation(spark):
+    from mobilitydb_spark.datagen import similarity
+    emb = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1)).cast("float")
+                  for j in range(4)]).alias("embedding"))
+    q = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), "embedding")
+    c = emb.select(F.col("vec_id").alias("cid"), "embedding")
+    df = similarity.ivf_topk(q, c, 3, n_centroids=4, nprobe=2,
+                             quantizer="sample")
+    try:
+        _assert_driver_table_is_local(df)
+    finally:
+        spark.catalog.clearCache()
