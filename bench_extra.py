@@ -8,6 +8,7 @@ Usage:
   SPARK_GRAFT_SF_DIR=<sf dir> python bench_extra.py q1 q2 ...  # default: bench.py's
   python bench_extra.py --noop q1        # noop sink instead of force()
   python bench_extra.py --reps 3 q1      # report all reps (first=warm-up)
+  python bench_extra.py --cpu q1         # also each rep's process-tree CPU s
 """
 from __future__ import annotations
 
@@ -20,7 +21,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from bench import SF_DIR  # noqa: E402  (the frozen suite's data dir)
+from bench import SF_DIR, _proc_sample  # noqa: E402  (frozen suite)
+from perfbench.run import tree_cpu_s  # noqa: E402
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -30,6 +32,9 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                     help="noop sink instead of force()")
     ap.add_argument("--reps", type=int, default=2,
                     help="repetitions per query (the first is a warm-up)")
+    ap.add_argument("--cpu", action="store_true",
+                    help="also report each rep's CPU seconds over the "
+                         "process tree (driver, JVM, Python workers)")
     return ap.parse_args(argv)
 
 
@@ -48,12 +53,13 @@ def main() -> None:
         return df.select(F.count(F.lit(1)).alias("n"),
                          F.bit_xor(F.xxhash64(*cols)).alias("chk")).collect()
 
-    out = {}
+    out, cpu = {}, {}
     for name in args.queries:
         fn, _ = reg[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        times = []
+        times, cpus = [], []
         for _ in range(args.reps):
+            c0 = tree_cpu_s(_proc_sample()) if args.cpu else 0.0
             t0 = time.time()
             df = fn(spark, SF_DIR)
             if args.noop:
@@ -61,10 +67,18 @@ def main() -> None:
             else:
                 force(df)
             times.append(round(time.time() - t0, 3))
+            if args.cpu:
+                cpus.append(round(tree_cpu_s(_proc_sample()) - c0, 3))
         out[name] = times
-        print(name, times, flush=True)
-    print(json.dumps({"sf": os.path.basename(SF_DIR.rstrip('/')),
-                      "noop": args.noop, "times": out}))
+        if args.cpu:
+            cpu[name] = cpus
+        print(name, times, *(["cpu_s", cpus] if args.cpu else []),
+              flush=True)
+    res = {"sf": os.path.basename(SF_DIR.rstrip('/')), "noop": args.noop,
+           "times": out}
+    if args.cpu:
+        res["cpu_s"] = cpu
+    print(json.dumps(res))
     spark.stop()
 
 

@@ -337,7 +337,12 @@ def dwithin_join_geog(left: DataFrame, right: DataFrame, dist_m: float,
     highest latitude a match could sit at, |lat|+dist, so high-latitude
     rows get the wider disk they need instead of silently dropping
     pairs), then an exact haversine refine that stays in whole-stage
-    codegen via the shared `geog.haversine_sql` expression."""
+    codegen via the shared `geog.haversine_sql` expression.
+
+    ``res`` is a floor, not the grid resolution used: the grid is
+    auto-fit to ``dist_m`` (the fit is capped at 14) and the join runs
+    at ``max(res, fit)``.  The result does not depend on ``res``; only
+    the cost does."""
     from .geog import haversine_sql
     # Auto-fit the grid to the query distance (r6): the caller's res is
     # a FLOOR, and the effective resolution sizes cells near the search

@@ -799,31 +799,10 @@ _BOX = (10.0, 40.0, 30.0, 60.0)  # lon_min, lat_min, lon_max, lat_max
 def q_traj_ever_in_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ever/always intersects(tpoint, box) per user over discrete
     instant sets (`tpoint.c:452-545` ever_eq family; spatial variant
-    via the at_geometry kernel) — oracle: EXISTS / ALL in SQL."""
-    import pandas as pd
-    from . import geo as G
-    from .everops import intersects, within
-    from .types import Temporal
-    pts = _ev_points(spark, sf_dir)
-    ring = [[_BOX[0], _BOX[1]], [_BOX[2], _BOX[1]], [_BOX[2], _BOX[3]],
-            [_BOX[0], _BOX[3]], [_BOX[0], _BOX[1]]]
-    import numpy as np
-    box = G.from_wkb(G.polygon_wkb(np.array(ring)))
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        pdf = pdf.drop_duplicates(subset=["t"]).sort_values("t")
-        t = pdf["t"].to_numpy().astype("datetime64[us]").astype(np.int64)
-        tv = Temporal.instant_set(t, pdf[["x", "y"]].to_numpy())
-        return pd.DataFrame([{
-            "key": key,
-            "ever_in": bool(intersects(tv, box)),
-            "always_in": bool(within(tv, box))}])
-
-    from .spark_temporal import _per_key_kernel
-    return _per_key_kernel(pts, "key",
-                           "key bigint, ever_in boolean, "
-                           "always_in boolean", agg).orderBy("key")
+    via `instants_ever_always_in_rect`) — oracle: EXISTS / ALL in SQL."""
+    from .spark_temporal import instants_ever_always_in_rect
+    return instants_ever_always_in_rect(_ev_points(spark, sf_dir),
+                                        _BOX).orderBy("key")
 
 
 _ORACLE_EVER_IN_BOX = f"""

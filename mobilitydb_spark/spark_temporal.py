@@ -1016,6 +1016,42 @@ def extent(points: DataFrame, key: str = "key", t: str = "t",
         F.min(t).alias("tmin"), F.max(t).alias("tmax"))
 
 
+def _in_rect(rect: tuple[float, ...], x: str = "x", y: str = "y"):
+    """Column: ``geo.points_in_polygon`` against the axis-aligned box
+    ``rect = (x0, y0, x1, y1)`` — the closed box dilated by
+    ``geo.BOUNDARY_EPS`` (Euclidean) united with the open box, the rule
+    ``joins._refine_pip`` uses for rectangles."""
+    from pyspark.sql import functions as F
+    from . import geo
+    x0, y0, x1, y1 = (F.lit(float(v)) for v in rect)
+    px, py = F.col(x), F.col(y)
+    ddx = F.greatest(x0 - px, px - x1, F.lit(0.0))
+    ddy = F.greatest(y0 - py, py - y1, F.lit(0.0))
+    return ((ddx * ddx + ddy * ddy <= geo.BOUNDARY_EPS * geo.BOUNDARY_EPS)
+            | ((px > x0) & (px < x1) & (py > y0) & (py < y1)))
+
+
+def instants_ever_always_in_rect(points: DataFrame,
+                                 rect: tuple[float, float, float, float],
+                                 key: str = "key", x: str = "x",
+                                 y: str = "y") -> DataFrame:
+    """Per-key ``(key, ever_in, always_in)`` of a discrete tgeompoint
+    against the box ``rect = (x0, y0, x1, y1)`` — pure built-ins, no UDF.
+
+    Scope: instant-set input, one row per (key, t), as
+    ``queries._ev_points`` produces.  There, ``intersects``/``within``
+    (`tpoint_spatialrels.c:300+`; ``everops.intersects`` /
+    ``everops.within`` over ``Temporal.instant_set``) reduce to "some
+    instant is inside" and "every instant is inside", since
+    ``at_geometry`` of an instant set keeps exactly the instants that
+    ``points_in_polygon`` accepts.  Continuous sequences also need the
+    segment crossings (``at_box_stats``) and are out of scope."""
+    from pyspark.sql import functions as F
+    inside = _in_rect(rect, x, y)
+    return points.groupBy(key).agg(F.bool_or(inside).alias("ever_in"),
+                                   F.bool_and(inside).alias("always_in"))
+
+
 def tbool_agg_profile(points: DataFrame, probes_us: list[int],
                       threshold: float, key: str = "key", t: str = "t",
                       v: str = "v") -> DataFrame:

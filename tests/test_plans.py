@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from mobilitydb_spark import cells, fixtures, joins, pipeline, tiles
 
+SF_TINY = "/root/testdata/sf0.001"
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -175,7 +177,7 @@ def test_spatial_rels_jvm_matches_kernel(spark):
 
     from mobilitydb_spark.queries import (q_spatial_rels_rect,
                                           q_spatial_rels_rect_kernel)
-    sf = "/root/testdata/sf0.001"
+    sf = SF_TINY
     a = q_spatial_rels_rect(spark, sf).toPandas() \
         .sort_values(["key", "rect_id"]).reset_index(drop=True)
     b = q_spatial_rels_rect_kernel(spark, sf).toPandas() \
@@ -184,6 +186,18 @@ def test_spatial_rels_jvm_matches_kernel(spark):
     pd.testing.assert_frame_equal(a, b.astype(a.dtypes.to_dict()))
     plan = q_spatial_rels_rect(spark, sf) \
         ._jdf.queryExecution().executedPlan().toString()
+    for bad in ("BatchEvalPython", "ArrowEvalPython",
+                "FlatMapGroupsInPandas", "MapInPandas"):
+        assert bad not in plan, bad
+
+
+def test_traj_ever_in_box_is_python_free(spark):
+    """ever/always-in-box over instant sets is a Catalyst aggregate:
+    no Python stage in the executed plan."""
+    from mobilitydb_spark.queries import q_traj_ever_in_box
+    df = q_traj_ever_in_box(spark, SF_TINY)
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
     for bad in ("BatchEvalPython", "ArrowEvalPython",
                 "FlatMapGroupsInPandas", "MapInPandas"):
         assert bad not in plan, bad

@@ -388,6 +388,18 @@ def test_vectorized_at_range_at_box_match_kernels(spark):
         assert b["total_us"] == int(sum(p.upper - p.lower for p in ps2))
 
 
+def _rect_pin_points(rect):
+    """Hand-picked interior/exterior/edge/corner/eps-band points."""
+    from mobilitydb_spark import geo
+    x0, y0, x1, y1 = rect
+    e = geo.BOUNDARY_EPS
+    return [(20.0, 35.0), (x0, 35.0), (x1, 35.0), (20.0, y0), (20.0, y1),
+            (x0, y0), (x1, y1), (x0 - 2 * e, 35.0), (x0 + 2 * e, 35.0),
+            (x0 - 0.5 * e, 35.0), (x1 + 0.5 * e, y1 + 0.5 * e),
+            (x1 + 2 * e, y1 + 2 * e), (5.0, 35.0), (20.0, 60.0),
+            (x0 - 0.5 * e, y0 - 0.5 * e), (x0, 35.0 + 0.3 * e)]
+
+
 def test_refine_pip_rect_fast_path_matches_raycast():
     """The axis-aligned-rect classification in joins._refine_pip must
     equal points_in_polygon (ray-cast + BOUNDARY_EPS on-edge) for
@@ -397,11 +409,7 @@ def test_refine_pip_rect_fast_path_matches_raycast():
     ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
     g = geo.Geometry("Polygon", [ring])
     e = geo.BOUNDARY_EPS
-    pts = [(20.0, 35.0), (x0, 35.0), (x1, 35.0), (20.0, y0), (20.0, y1),
-           (x0, y0), (x1, y1), (x0 - 2 * e, 35.0), (x0 + 2 * e, 35.0),
-           (x0 - 0.5 * e, 35.0), (x1 + 0.5 * e, y1 + 0.5 * e),
-           (x1 + 2 * e, y1 + 2 * e), (5.0, 35.0), (20.0, 60.0),
-           (x0 - 0.5 * e, y0 - 0.5 * e), (x0, 35.0 + 0.3 * e)]
+    pts = _rect_pin_points((x0, y0, x1, y1))
     lon = np.array([p[0] for p in pts])
     lat = np.array([p[1] for p in pts])
     want = geo.points_in_polygon(lon, lat, g)
@@ -410,6 +418,106 @@ def test_refine_pip_rect_fast_path_matches_raycast():
     got = (ddx * ddx + ddy * ddy <= e * e) \
         | ((lon > x0) & (lon < x1) & (lat > y0) & (lat < y1))
     assert np.array_equal(got, want), list(zip(pts, got, want))
+
+
+def _rect_probe_points(rect, seed):
+    """Edges, corners, interior and exterior points of ``rect``, and
+    every edge/corner point shifted by 0, ±0.5·eps, ±0.8·eps and ±2·eps
+    per axis (a 0.8·eps diagonal step off a corner is outside the
+    Euclidean band but inside a square one)."""
+    from mobilitydb_spark import geo
+    x0, y0, x1, y1 = rect
+    e = geo.BOUNDARY_EPS
+    rng = np.random.default_rng(seed)
+    u = rng.uniform(size=6)
+    on = [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+    for f in u:
+        xf, yf = x0 + f * (x1 - x0), y0 + f * (y1 - y0)
+        on += [(xf, y0), (xf, y1), (x0, yf), (x1, yf)]
+    offs = (-2 * e, -0.8 * e, -0.5 * e, 0.0, 0.5 * e, 0.8 * e, 2 * e)
+    pts = [(px + dx, py + dy) for px, py in on for dx in offs for dy in offs]
+    w, h = x1 - x0, y1 - y0
+    pts += [(x0 + a * w, y0 + b * h)
+            for a, b in rng.uniform(0.0, 1.0, (20, 2))]  # interior
+    pts += [(x0 + a * w, y0 + b * h)
+            for a, b in rng.uniform(-1.0, 2.0, (40, 2))]  # mostly exterior
+    return pts
+
+
+@pytest.mark.parametrize("rect", [(10.0, 20.0, 30.0, 50.0),
+                                  (10.0, 40.0, 30.0, 60.0),
+                                  (-3.7, 0.1, 12.3, 0.7)])
+def test_in_rect_column_matches_points_in_polygon(spark, rect):
+    """The Catalyst in-rect predicate behind
+    instants_ever_always_in_rect, evaluated in Spark, must equal
+    points_in_polygon on the box polygon (the refine_pip rect pin's
+    points plus seeded edge/corner/eps-band/interior/exterior ones)."""
+    from mobilitydb_spark import geo
+    from mobilitydb_spark.spark_temporal import _in_rect
+    x0, y0, x1, y1 = rect
+    pts = _rect_pin_points(rect) + _rect_probe_points(rect, seed=11)
+    pdf = pd.DataFrame({"i": np.arange(len(pts), dtype=np.int64),
+                        "x": [p[0] for p in pts], "y": [p[1] for p in pts]})
+    got = spark.createDataFrame(pdf).select(
+        "i", _in_rect(rect).alias("inside")).toPandas() \
+        .sort_values("i")["inside"].to_numpy(dtype=bool)
+    ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+    want = geo.points_in_polygon(pdf["x"].to_numpy(), pdf["y"].to_numpy(),
+                                 geo.Geometry("Polygon", [ring]))
+    assert want.any() and not want.all()
+    assert np.array_equal(got, want), \
+        [(p, g, w) for p, g, w in zip(pts, got, want) if g != w]
+
+
+def test_instants_ever_always_in_rect_matches_everops(spark):
+    """Per-key (ever_in, always_in) must equal everops.intersects /
+    everops.within over Temporal.instant_set, including always_in keys
+    whose instants sit on the boundary or in the eps band."""
+    from mobilitydb_spark import geo
+    from mobilitydb_spark.everops import intersects, within
+    from mobilitydb_spark.spark_temporal import instants_ever_always_in_rect
+    from mobilitydb_spark.types import Temporal
+    rect = (10.0, 40.0, 30.0, 60.0)
+    x0, y0, x1, y1 = rect
+    e = geo.BOUNDARY_EPS
+    inside = [(20.0, 50.0), (10.5, 59.9), (29.9, 40.1)]
+    boundary = [(x0, y0), (x1, y1), (x0, 50.0), (20.0, y1), (x1, 45.5)]
+    band_in = [(x0 - 0.5 * e, 50.0), (20.0, y1 + 0.5 * e),
+               (x1 + 0.5 * e, y0 - 0.5 * e)]
+    band_out = [(x0 - 2 * e, 50.0), (20.0, y0 - 2 * e),
+                (x1 + 2 * e, y1 + 2 * e)]
+    outside = [(5.0, 50.0), (20.0, 70.0), (35.0, 35.0)]
+    keys = [inside, boundary, boundary + band_in,
+            inside + boundary + band_in, inside + band_out,
+            band_in + band_out, outside, outside + boundary]
+    keys += [[p] for p in inside + boundary + band_in + band_out + outside]
+    probe = _rect_probe_points(rect, seed=5)
+    rng = np.random.default_rng(5)
+    for _ in range(40):
+        n = int(rng.integers(1, 8))
+        keys.append([probe[i] for i in rng.choice(len(probe), n,
+                                                  replace=False)])
+    t0 = 1_704_067_200_000_000
+    rows = [(k, t0 + i * 3_600_000_000, px, py)
+            for k, pts in enumerate(keys) for i, (px, py) in enumerate(pts)]
+    pdf = pd.DataFrame(rows, columns=["key", "t_us", "x", "y"])
+    pdf["t"] = pd.to_datetime(pdf["t_us"], unit="us")
+    got = {r["key"]: (r["ever_in"], r["always_in"])
+           for r in instants_ever_always_in_rect(
+               spark.createDataFrame(pdf[["key", "t", "x", "y"]]),
+               rect).collect()}
+    ring = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+    box = geo.Geometry("Polygon", [ring])
+    assert len(got) == len(keys)
+    seen = set()
+    for k, g in pdf.groupby("key"):
+        tv = Temporal.instant_set(g["t_us"].to_numpy(),
+                                  g[["x", "y"]].to_numpy())
+        want = (bool(intersects(tv, box)), bool(within(tv, box)))
+        assert got[k] == want, (k, keys[k], got[k], want)
+        seen.add(want)
+    assert seen == {(True, True), (True, False), (False, False)}
+    assert got[1] == got[2] == got[3] == (True, True)
 
 
 def test_minhash_numpy_shingle_combine_matches_catalyst(spark):

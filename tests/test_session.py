@@ -31,3 +31,9 @@ def test_bench_extra_reps_both_spellings():
         assert (a.reps, a.queries, a.noop) == (3, ["q1"], False)
     a = bench_extra.parse_args(["--noop", "q1", "q2"])
     assert (a.reps, a.queries, a.noop) == (2, ["q1", "q2"], True)
+
+
+def test_bench_extra_cpu_flag():
+    a = bench_extra.parse_args(["--cpu", "--reps", "2", "q1"])
+    assert (a.cpu, a.reps, a.queries) == (True, 2, ["q1"])
+    assert bench_extra.parse_args(["q1"]).cpu is False
