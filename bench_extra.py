@@ -8,7 +8,9 @@ Usage:
   SPARK_GRAFT_SF_DIR=<sf dir> python bench_extra.py q1 q2 ...  # default: bench.py's
   python bench_extra.py --noop q1        # noop sink instead of force()
   python bench_extra.py --reps 3 q1      # report all reps (first=warm-up)
-  python bench_extra.py --cpu q1         # also each rep's process-tree CPU s
+
+Each rep reports wall seconds and CPU seconds over the process tree
+(driver, JVM, Python workers).
 """
 from __future__ import annotations
 
@@ -32,10 +34,17 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                     help="noop sink instead of force()")
     ap.add_argument("--reps", type=int, default=2,
                     help="repetitions per query (the first is a warm-up)")
-    ap.add_argument("--cpu", action="store_true",
-                    help="also report each rep's CPU seconds over the "
-                         "process tree (driver, JVM, Python workers)")
     return ap.parse_args(argv)
+
+
+def timed(run, *args) -> tuple[float, float]:
+    """(wall s, process-tree CPU s) of ``run(*args)``; the CPU samples
+    are taken outside the wall-clock window."""
+    c0 = tree_cpu_s(_proc_sample())
+    t0 = time.time()
+    run(*args)
+    wall = round(time.time() - t0, 3)
+    return wall, round(tree_cpu_s(_proc_sample()) - c0, 3)
 
 
 def main() -> None:
@@ -53,31 +62,26 @@ def main() -> None:
         return df.select(F.count(F.lit(1)).alias("n"),
                          F.bit_xor(F.xxhash64(*cols)).alias("chk")).collect()
 
+    def rep(fn):
+        df = fn(spark, SF_DIR)
+        if args.noop:
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            force(df)
+
     out, cpu = {}, {}
     for name in args.queries:
         fn, _ = reg[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         times, cpus = [], []
         for _ in range(args.reps):
-            c0 = tree_cpu_s(_proc_sample()) if args.cpu else 0.0
-            t0 = time.time()
-            df = fn(spark, SF_DIR)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                force(df)
-            times.append(round(time.time() - t0, 3))
-            if args.cpu:
-                cpus.append(round(tree_cpu_s(_proc_sample()) - c0, 3))
-        out[name] = times
-        if args.cpu:
-            cpu[name] = cpus
-        print(name, times, *(["cpu_s", cpus] if args.cpu else []),
-              flush=True)
+            wall, cpu_s = timed(rep, fn)
+            times.append(wall)
+            cpus.append(cpu_s)
+        out[name], cpu[name] = times, cpus
+        print(name, times, "cpu_s", cpus, flush=True)
     res = {"sf": os.path.basename(SF_DIR.rstrip('/')), "noop": args.noop,
-           "times": out}
-    if args.cpu:
-        res["cpu_s"] = cpu
+           "times": out, "cpu_s": cpu}
     print(json.dumps(res))
     spark.stop()
 

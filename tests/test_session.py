@@ -3,6 +3,7 @@ bench_extra command line."""
 
 import os
 import sys
+import time
 
 from mobilitydb_spark import session
 
@@ -33,7 +34,10 @@ def test_bench_extra_reps_both_spellings():
     assert (a.reps, a.queries, a.noop) == (2, ["q1", "q2"], True)
 
 
-def test_bench_extra_cpu_flag():
-    a = bench_extra.parse_args(["--cpu", "--reps", "2", "q1"])
-    assert (a.cpu, a.reps, a.queries) == (True, 2, ["q1"])
-    assert bench_extra.parse_args(["q1"]).cpu is False
+def test_bench_extra_timed_counts_process_cpu():
+    def spin(cpu_s):
+        t0 = time.process_time()
+        while time.process_time() - t0 < cpu_s:
+            pass
+    wall, cpu = bench_extra.timed(spin, 0.3)
+    assert wall > 0 and cpu >= 0.25
